@@ -1039,51 +1039,43 @@ SELECT cluster, COUNT(*) AS n FROM ({assign(f'c{iters}')}
     return "".join(parts)
 
 
-_PQ_BOOKS_CACHE: dict = {}
-_PQ_INDEX_CACHE: dict = {}
 _PQ_M, _PQ_KSUB, _PQ_ITER = 8, 16, 2
 _PQ_D = DIM // _PQ_M
 _PQ_TRAIN_CAP = 16384
 
 
 def _pq_books(spark: SparkSession, sf: str) -> list:
-    """Codebooks for the registered PQ queries, memoized per sf dir —
-    training is deterministic (same data → same books), so the
-    sim_pq_topk / sim_ivfpq_topk pair and repeated bench iterations
-    share one training run instead of re-deriving identical
-    codebooks. Mirrors production shape: train once, reuse."""
-    if sf not in _PQ_BOOKS_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import pq
+    """Codebooks for the registered PQ queries, trained from the
+    ``sf`` embeddings on every call. Training is deterministic (same
+    data → same books), so sim_pq_topk and sim_ivfpq_topk see the
+    same codebooks, each from its own run."""
+    from icnarc_to_philips_linkage_spark.operators import pq
 
-        _PQ_BOOKS_CACHE[sf] = pq.pq_train(
-            spread(load(spark, sf, "embeddings"), "vec_id"),
-            dim=DIM,
-            m=_PQ_M,
-            ksub=_PQ_KSUB,
-            max_iter=_PQ_ITER,
-            # dim*ksub = 1024 codebook params: 16k deterministic-sample
-            # vectors train them as well as the full corpus, and the
-            # training passes stop scaling with corpus size (FAISS-style
-            # train-on-sample; VERDICT r4 #3)
-            max_train_rows=_PQ_TRAIN_CAP,
-        )
-    return _PQ_BOOKS_CACHE[sf]
+    return pq.pq_train(
+        spread(load(spark, sf, "embeddings"), "vec_id"),
+        dim=DIM,
+        m=_PQ_M,
+        ksub=_PQ_KSUB,
+        max_iter=_PQ_ITER,
+        # dim*ksub = 1024 codebook params: 16k deterministic-sample
+        # vectors train them as well as the full corpus, and the
+        # training passes stop scaling with corpus size (FAISS-style
+        # train-on-sample; VERDICT r4 #3)
+        max_train_rows=_PQ_TRAIN_CAP,
+    )
 
 
 def _pq_index(spark: SparkSession, sf: str) -> str:
     """Persisted IVF-PQ index table for the registered probe queries,
-    memoized per sf dir like ``_pq_books``: the index is built (encode
-    + bucketed write) at most once per corpus, then every probe query
-    — single-cell, multiprobe, repeated bench iterations — answers
-    from the same on-disk tables. This IS the build-once/probe-many
-    contract ``write_pq_index`` documents; rebuilding per probe call
-    was pricing the build into every probe. The catalog check guards
-    a memo that outlives the SparkSession that wrote the tables.
+    rebuilt (train + encode + bucketed write) from the ``sf``
+    embeddings on every call, so a probe always answers from an index
+    of the current files; the probe itself then never trains and
+    never shuffles the corpus.
 
     The index path and table name are DETERMINISTIC per sf dir (an
-    md5 of the sf path under the system temp dir) so a rebuild after
-    a catalog drop overwrites the previous on-disk index instead of
-    leaking a fresh mkdtemp each time (all three index tables write
+    md5 of the sf path under the system temp dir) so each rebuild
+    overwrites the previous on-disk index instead of leaking a fresh
+    mkdtemp each time (all three index tables write
     mode('overwrite'))."""
     import hashlib
     import os
@@ -1091,9 +1083,6 @@ def _pq_index(spark: SparkSession, sf: str) -> str:
 
     from icnarc_to_philips_linkage_spark.operators import pq
 
-    table = _PQ_INDEX_CACHE.get(sf)
-    if table is not None and spark.catalog.tableExists(table):
-        return table
     emb = spread(load(spark, sf, "embeddings"), "vec_id")
     sf_key = hashlib.md5(sf.encode()).hexdigest()[:10]
     table = f"pq_idx_{sf_key}"
@@ -1107,9 +1096,7 @@ def _pq_index(spark: SparkSession, sf: str) -> str:
         ksub=_PQ_KSUB,
         max_iter=_PQ_ITER,
         max_train_rows=_PQ_TRAIN_CAP,
-        codebooks=_pq_books(spark, sf),
     )
-    _PQ_INDEX_CACHE[sf] = table
     return table
 
 
@@ -1266,14 +1253,13 @@ def sim_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
 def sim_pq_index_probe(spark: SparkSession, sf: str) -> DataFrame:
     """Persisted IVF-PQ index, probed (pq.write_pq_index /
     pq.probe_pq_index — VERDICT r7 #2): the bucketed codes table plus
-    codebook and cell-centroid side tables are written once to a
+    codebook and cell-centroid side tables are written to a
     throwaway location, then the standard query batch is answered from
     the index alone — the probe never trains and never shuffles the
     corpus (plan-asserted in tests). Result-identical to
     ``sim_ivfpq_topk`` by the shared ``_adc_topk_routed`` core, so it
     carries the SAME full unrolled-training oracle (``_ivfpq_sql``).
-    The build is memoized per sf dir (``_pq_index``) so repeated
-    probes — including the multiprobe twin — price only the probe."""
+    Each call rebuilds the index (``_pq_index``) before probing."""
     from icnarc_to_philips_linkage_spark.operators import pq
 
     table = _pq_index(spark, sf)
@@ -1288,8 +1274,8 @@ def sim_pq_index_probe2(spark: SparkSession, sf: str) -> DataFrame:
     the standard IVF recall knob, here carried through the full
     unrolled-training oracle (`_ivfpq_sql(2)` routes rn <= 2; each
     neighbor joins through its single owning cell, so no dedup is
-    needed on either engine). Shares the memoized ``_pq_index`` build
-    with the single-probe query."""
+    needed on either engine). Builds its index with the same
+    ``_pq_index`` as the single-probe query."""
     from icnarc_to_philips_linkage_spark.operators import pq
 
     table = _pq_index(spark, sf)
@@ -2859,21 +2845,16 @@ def text_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_BPE_MERGE_CACHE: dict = {}
-
-
 def _bpe_merge_rows(spark: SparkSession, sf: str) -> list:
-    """Trained merge table for the registered BPE queries, memoized
-    per sf dir (the _pq_books pattern): training runs at most once per
-    corpus; text_bpe_train and text_bpe_encode share the one run."""
-    if sf not in _BPE_MERGE_CACHE:
-        _BPE_MERGE_CACHE[sf] = [
-            tuple(r)
-            for r in text.bpe_train(
-                load(spark, sf, "documents"), n_merges=_BPE_MERGES
-            ).collect()
-        ]
-    return _BPE_MERGE_CACHE[sf]
+    """Trained merge table for the registered BPE queries, trained
+    from the ``sf`` documents on every call (text_bpe_train,
+    text_bpe_encode and text_tokenizer_fertility each run it)."""
+    return [
+        tuple(r)
+        for r in text.bpe_train(
+            load(spark, sf, "documents"), n_merges=_BPE_MERGES
+        ).collect()
+    ]
 
 
 def text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
@@ -4118,7 +4099,7 @@ FROM b GROUP BY 1, 2
 def text_tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer fertility / compression report per source: after
     applying the trained BPE merges corpus-wide (text.bpe_encode with
-    text_bpe_train's memoized run), tokens-per-word and
+    text_bpe_train's merges), tokens-per-word and
     chars-per-token per source — the standard 'how well does the
     tokenizer fit each slice' deployment report. Integer sums, one
     doc-grain join to the source column."""
@@ -6944,20 +6925,17 @@ ORDER BY score DESC, doc_id LIMIT {_PRF_TOPK}
 
 
 _PCA_ITERS = 4
-_PCA_CACHE: dict = {}
 
 
 def _pca_result(spark: SparkSession, sf: str):
-    """Memoized power-iteration result per sf dir (the _gd_weights
-    discipline: deterministic training shared by every consumer —
-    emb_pca_power and emb_anisotropy price ONE run)."""
-    if sf not in _PCA_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import clustering
+    """Power-iteration result over the ``sf`` embeddings, computed on
+    every call (deterministic, so emb_pca_power and emb_anisotropy see
+    the same direction, each from its own run)."""
+    from icnarc_to_philips_linkage_spark.operators import clustering
 
-        _PCA_CACHE[sf] = clustering.power_iteration_top_pc(
-            load(spark, sf, "embeddings"), dim=DIM, iters=_PCA_ITERS
-        )
-    return _PCA_CACHE[sf]
+    return clustering.power_iteration_top_pc(
+        load(spark, sf, "embeddings"), dim=DIM, iters=_PCA_ITERS
+    )
 
 
 def emb_pca_power(spark: SparkSession, sf: str) -> DataFrame:
@@ -7047,7 +7025,7 @@ FROM v{iters}, generate_series(1, {dim}) AS t(i)
 
 def emb_anisotropy(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-space anisotropy diagnostic
-    (clustering.anisotropy_report over the memoized power-iteration
+    (clustering.anisotropy_report over the power-iteration
     direction): dominant eigenvalue, total variance budget
     (trace/n), explained-variance ratio, and mean |cos(x, v_top)| —
     the all-but-the-top (Mu & Viswanath 2018) decision input for
@@ -7628,11 +7606,10 @@ QUERIES: dict[str, tuple] = {
 }
 
 
-# These two probe queries lazily BUILD the shared per-sf persisted
-# IVF-PQ warehouse table behind a tableExists memo (_pq_index) — two
-# concurrent probes of the same sf both miss the memo and race the
-# overwrite write. Everything else in this module is side-effect-free
-# per call (plain dict memos recompute the same value idempotently).
+# These two probe queries BUILD the per-sf persisted IVF-PQ warehouse
+# table (_pq_index) under a fixed name and path with overwrite writes —
+# two concurrent probes of the same sf race that write. Everything else
+# in this module is side-effect-free per call.
 EXCLUSIVE: frozenset[str] = frozenset(
     {"sim_pq_index_probe", "sim_pq_index_probe2"}
 )

@@ -29,10 +29,10 @@ def all_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], s
 
 def exclusive_queries() -> frozenset[str]:
     """Names whose callables touch PROCESS-GLOBAL named state —
-    fixed-name temp views (the sql surface) or memo-guarded persisted
-    warehouse tables (the PQ index probes). Concurrent runners must
-    execute these serially; everything else is safe to interleave on
-    one SparkSession."""
+    fixed-name temp views (the sql surface) or the fixed-name persisted
+    warehouse tables that the PQ index probes rebuild with overwrite
+    writes. Concurrent runners must execute these serially; everything
+    else is safe to interleave on one SparkSession."""
     out: set[str] = set()
     for mod in _MODULES:
         out |= getattr(mod, "EXCLUSIVE", frozenset())

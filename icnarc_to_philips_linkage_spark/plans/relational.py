@@ -5407,7 +5407,6 @@ FROM normed GROUP BY source
 
 _GD_LR, _GD_ITERS = 0.5, 5
 _GD_FEATURES = ["x_qty", "x_disc", "x_tax"]
-_GD_WEIGHTS_CACHE: dict = {}
 
 
 def _gd_feats(spark: SparkSession, sf: str) -> DataFrame:
@@ -5430,22 +5429,20 @@ def _gd_feats(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _gd_trajectory(spark: SparkSession, sf: str) -> list:
-    """Trained GD trajectory (weights after EVERY iteration), memoized
-    per sf dir (the _pq_books discipline: training is deterministic —
+    """Trained GD trajectory (weights after EVERY iteration), trained
+    from the ``sf`` tables on every call. Training is deterministic —
     same data → same weights bit-for-bit — so the classifier, the AUC
-    evaluation, the conformal calibration, and the cartography map all
-    share ONE training run; production trains once and reuses)."""
-    if sf not in _GD_WEIGHTS_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import regression
+    evaluation, the conformal calibration and the cartography map all
+    see the same weights, each from its own run."""
+    from icnarc_to_philips_linkage_spark.operators import regression
 
-        _GD_WEIGHTS_CACHE[sf] = regression.gd_train_trajectory(
-            _gd_feats(spark, sf),
-            _GD_FEATURES,
-            "y",
-            lr=_GD_LR,
-            iters=_GD_ITERS,
-        )
-    return _GD_WEIGHTS_CACHE[sf]
+    return regression.gd_train_trajectory(
+        _gd_feats(spark, sf),
+        _GD_FEATURES,
+        "y",
+        lr=_GD_LR,
+        iters=_GD_ITERS,
+    )
 
 
 def _gd_weights(spark: SparkSession, sf: str) -> list:
@@ -5456,7 +5453,7 @@ def _gd_weights(spark: SparkSession, sf: str) -> list:
 def ml_gd_classifier(spark: SparkSession, sf: str) -> DataFrame:
     """Full-batch gradient-descent linear classifier predicting
     returned order lines from (quantity, discount, tax), each scaled
-    onto [0,1] (regression.gd_train via the memoized ``_gd_weights``).
+    onto [0,1] (regression.gd_train via ``_gd_weights``).
     Per iteration ONE map-combined aggregation reduces the corpus to 4
     exact decimal gradient sums; the fast-sigmoid link plus 1e-12
     contribution quantization make every iteration bit-identical in
@@ -5619,7 +5616,7 @@ def _conf_key():
 def ml_gd_conformal(spark: SparkSession, sf: str) -> DataFrame:
     """Split conformal prediction wrapped around the trained GD
     classifier (evaluation.conformal_coverage_binary): score every
-    line with the memoized weights, split calibration/test by md5
+    line with the trained weights, split calibration/test by md5
     hash band on (orderkey, linenumber) — deterministic and
     engine-portable like every split in sampling — calibrate the
     80%-coverage nonconformity quantile on one half, and report
@@ -5726,7 +5723,7 @@ _CARTO_CONF_HI, _CARTO_CONF_LO, _CARTO_VAR_HI = 0.55, 0.45, 0.028
 
 def ml_gd_cartography(spark: SparkSession, sf: str) -> DataFrame:
     """Dataset cartography over the GD training run
-    (regression.cartography_map on the memoized trajectory): score
+    (regression.cartography_map on the trained trajectory): score
     every line at ALL five weight snapshots in one map-only
     projection, compute per-example confidence/variability, bucket
     into easy/ambiguous/hard/middle regions, and profile the map by
@@ -8566,7 +8563,6 @@ FROM agg
 
 
 _QR_TAU, _QR_LR, _QR_ITERS = 0.75, 0.5, 12
-_QR_CACHE: dict = {}
 
 
 def _qr_feats(spark: SparkSession, sf: str) -> DataFrame:
@@ -8583,21 +8579,6 @@ def _qr_feats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _qr_trajectory(spark: SparkSession, sf: str) -> list:
-    if sf not in _QR_CACHE:
-        from icnarc_to_philips_linkage_spark.operators import regression
-
-        _QR_CACHE[sf] = regression.quantile_gd_train_trajectory(
-            _qr_feats(spark, sf),
-            ["x_qty"],
-            "y_price",
-            tau=_QR_TAU,
-            lr=_QR_LR,
-            iters=_QR_ITERS,
-        )
-    return _QR_CACHE[sf]
-
-
 def ml_quantile_reg(spark: SparkSession, sf: str) -> DataFrame:
     """Linear QUANTILE regression (Koenker-Bassett pinball loss,
     tau=0.75) of scaled gross price on scaled quantity by full-batch
@@ -8610,7 +8591,14 @@ def ml_quantile_reg(spark: SparkSession, sf: str) -> DataFrame:
     left-associated expression, 1e-12 grid, 9dp round)."""
     from icnarc_to_philips_linkage_spark.operators import regression
 
-    w = _qr_trajectory(spark, sf)[-1]
+    w = regression.quantile_gd_train_trajectory(
+        _qr_feats(spark, sf),
+        ["x_qty"],
+        "y_price",
+        tau=_QR_TAU,
+        lr=_QR_LR,
+        iters=_QR_ITERS,
+    )[-1]
     rho = regression.pinball_loss_expr(
         ["x_qty"], w, _QR_TAU, "y_price"
     )

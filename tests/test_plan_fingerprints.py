@@ -23,7 +23,7 @@ import pytest
 pytestmark = pytest.mark.slow
 
 from icnarc_to_philips_linkage_spark.plans.registry import all_queries
-from tools.gen_plan_fingerprints import MARKERS, fingerprint
+from tools.gen_plan_fingerprints import plan_fingerprint
 
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "..", "PLAN_FINGERPRINTS.json")
 GOLDEN = json.load(open(GOLDEN_PATH))
@@ -36,20 +36,9 @@ def test_plan_fingerprint_unchanged(spark, name, pair):
     if name not in GOLDEN:
         pytest.skip("new query — not yet in the golden fingerprints")
     fn, _ = pair
-    # sf0.001 with shuffle_partitions as in conftest: same env as the
-    # generator, so counts are deterministic. Clear cache marks first:
-    # a persisted intermediate from an EARLIER test in the shared
-    # session would print as InMemoryTableScan here and make the
-    # fingerprint depend on test order (observed: quality_ngram_lm /
-    # sample_dsir_weights flaking only in full-suite runs)
-    spark.catalog.clearCache()
-    plan = (
-        fn(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    got = fingerprint(plan)
+    # same routine and scale (sf0.001) as the generator, and the same
+    # shuffle_partitions (conftest), so counts are deterministic
+    got = plan_fingerprint(spark, fn)
     assert got == GOLDEN[name], (
         f"{name}: physical plan changed.\n  golden: {GOLDEN[name]}\n"
         f"  now:    {got}\nIf intentional, regenerate with "

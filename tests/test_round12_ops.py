@@ -2,8 +2,7 @@
 quantile regression, log-rank test, permutation test.
 
 Each operator gets hand-computed assertions here plus a registry
-oracle (plans/) and a 100M smoke (scale_smoke_r12.py) per the
-round-10 discipline.
+oracle (plans/).
 """
 
 from __future__ import annotations

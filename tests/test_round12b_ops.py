@@ -3,8 +3,7 @@ Anderson-Darling 2-sample, Durbin-Watson, Pettitt change point,
 Harrell's C, Lin's CCC, Cronbach's alpha.
 
 Each gets hand-computed assertions here plus a registry oracle
-(plans/) and a 100M smoke (scale_smoke_r12.py) per the round-10
-discipline.
+(plans/).
 """
 
 from __future__ import annotations

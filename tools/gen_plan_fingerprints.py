@@ -39,7 +39,15 @@ MARKERS = (
 SF = "/root/testdata/sf0.001"
 
 
-def fingerprint(plan: str) -> dict[str, int]:
+def plan_fingerprint(spark, fn) -> dict[str, int]:
+    """Count of each MARKERS node in ``fn``'s executed plan at ``SF`` —
+    the one routine the generator and the gate share. Cache marks left
+    by a previously-planned query (persisted intermediates register
+    with the CacheManager even before any action) would print as
+    InMemoryTableScan in LATER plans, making fingerprints depend on
+    planning ORDER, so clear them first."""
+    spark.catalog.clearCache()
+    plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
     return {m: plan.count(m) for m in MARKERS if plan.count(m)}
 
 
@@ -52,14 +60,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     for name, (fn, _) in sorted(all_queries().items()):
-        # cache marks left by a previously-planned query (persisted
-        # intermediates register with the CacheManager even before any
-        # action) would print as InMemoryTableScan in LATER plans,
-        # making fingerprints depend on planning ORDER — clear first,
-        # exactly as the gate does
-        spark.catalog.clearCache()
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        out[name] = fingerprint(plan)
+        out[name] = plan_fingerprint(spark, fn)
         print(name, out[name], flush=True)
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
